@@ -93,31 +93,37 @@ object Dedup {
     * so every downstream shuffle (dedup, signature agg, the Jaccard
     * equality join) carries a fixed-width key instead of arbitrary-length
     * text. Jaccard on hashes ≡ Jaccard on shingles modulo md5 collisions,
-    * and the oracle applies the identical transformation.
+    * and the oracle applies the identical transformation. Digesting happens
+    * exactly once per shingle; the 8 minhash "functions" are integer
+    * universal hashes over hex chunks of hg (see HashA/HashB above), not
+    * re-digests.
     *
-    * Built with posexplode + window `lead`s instead of array lambdas: Spark's
-    * higher-order functions evaluate interpreted (no codegen), which
-    * profiled at ~60µs per shingle; the explode/window/concat path is fully
-    * codegen'd apart from the (cheap, partition-local) WindowExec. One
-    * shuffle on doc_id, then everything is narrow. Digesting happens exactly
-    * once per shingle; the 8 minhash "functions" are integer universal
-    * hashes over hex chunks of hg (see HashA/HashB above), not re-digests.
-    * (r15 second pass: an arrays_zip-of-5-shifted-slices build — codegen,
-    * exchange-free — was tried and REVERTED: the five per-row array copies
-    * measured q46 0.90→1.1 s, q48 1.36→1.7 s vs the accepted artifact.
-    * The 2-slice variant DID pay on q169's bigrams; 5 slices do not.) */
-  private def hashedShingles(s: SparkSession, dir: String): DataFrame = {
-    val toks = Tables.documents(s, dir)
-      .select(col("doc_id"), posexplode(split(lower(col("text")), "[^a-z0-9]+")).as(Seq("p", "tok")))
-      .filter(col("tok") =!= "")
-    val w = Window.partitionBy(col("doc_id")).orderBy(col("p"))
-    toks
-      .withColumn("g", concat_ws(" ", col("tok"),
-        lead("tok", 1).over(w), lead("tok", 2).over(w), lead("tok", 3).over(w), lead("tok", 4).over(w)))
-      .withColumn("ok", lead("tok", 4).over(w).isNotNull)
-      .filter(col("ok"))
-      .select(col("doc_id"), md5(col("g").cast("binary")).as("hg"))
-      .dropDuplicates("doc_id", "hg")
+    * Built row-locally by the native `graft_shingle_md5` kernel
+    * ([[graft.functions.ShingleMd5]]): the scan fans out by doc_id to the
+    * shuffle width, each document's token array becomes its distinct
+    * shingle hashes in one codegen'd call, and one explode emits the rows.
+    * No window and no dropDuplicates: a document's shingles never leave
+    * its row (doc_id is the documents table's key). The fan-out hashes on
+    * doc_id rather than round-robin because the frame then leaves
+    * hash-partitioned by doc_id, as the old window shape did, and the
+    * consumers' doc-keyed joins (q106's verify join) need no extra
+    * exchange — round-robin measured +8.8 MB shuffle on q106 at sf0.1.
+    * Measured history of this frame:
+    *  - array lambdas (`transform` over `sequence`, as in `Text.shingles5`)
+    *    evaluate interpreted, ~60 µs per shingle — they lost;
+    *  - posexplode + four window `lead`s + dropDuplicates (codegen'd apart
+    *    from the WindowExec, one doc_id shuffle) was the shape until the
+    *    kernel;
+    *  - an arrays_zip-of-5-shifted-slices build was tried and REVERTED: the
+    *    five per-row array copies measured q46 0.90→1.1 s, q48 1.36→1.7 s;
+    *  - the native kernel won: q106 at sf0.1 on 4 cores, warm, executor
+    *    task time 5.2 → 2.6 s and shuffle write 21.3 → 19.0 MB. */
+  private[graft] def hashedShingles(s: SparkSession, dir: String): DataFrame = {
+    graft.functions.GraftExtensions.register(s)
+    Tables.documents(s, dir)
+      .repartition(col("doc_id"))
+      .select(col("doc_id"), explode(graft.functions.TextExpressions.shingle_md5(
+        split(lower(col("text")), "[^a-z0-9]+"), 5)).as("hg"))
   }
 
   private def hashedShinglesSql: String =

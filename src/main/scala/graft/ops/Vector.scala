@@ -33,8 +33,9 @@ object Vector {
   /** Sequential left-fold dot product — the codegen'd native expression
     * ([[graft.functions.DotProduct]]); emits the identical `acc += a[i]*b[i]`
     * fold as the HOF formulation and DuckDB's list_reduce, just compiled.
-    * Sessions must call [[graft.functions.VectorExpressions.register]] first
-    * (each query entry does). */
+    * Sessions must hold the native functions ([[graft.GraftSession]]
+    * installs them; each query entry also calls
+    * [[graft.functions.GraftExtensions.register]]). */
   private def dot(a: Column, b: Column): Column =
     graft.functions.VectorExpressions.dot_product(a, b)
   private def dotSql(a: String, b: String): String =
@@ -69,7 +70,7 @@ object Vector {
     * are the query set (broadcast); each scans the full corpus once
     * (BroadcastNestedLoopJoin) and keeps its 10 nearest by cosine. */
   def q50CosineTopk(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(s)
+    graft.functions.GraftExtensions.register(s)
     val emb = Tables.embeddings(s, dir).select(col("vec_id"), v(col("embedding")).as("v"))
       .withColumn("nrm", norm(col("v")))
     val q = emb.filter(col("vec_id") % 100 === 0)
@@ -105,7 +106,7 @@ object Vector {
     * an equi-join on centroid id, which is what makes IVF the 100 TB path.
     * Self-matches are excluded. */
   def q51IvfTopk(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(s)
+    graft.functions.GraftExtensions.register(s)
     val emb = Tables.embeddings(s, dir).select(col("vec_id"), v(col("embedding")).as("v"))
       .withColumn("nrm", norm(col("v")))
     val cent = emb.filter(col("vec_id") < 8)
@@ -299,33 +300,45 @@ object Vector {
     *
     * "Training" is deterministic (centroid c of block b = vec c's block-b
     * subvector, c < 16). At scale: codes are 8 bytes/vector (64× smaller
-    * than raw), encode is one broadcast join + argmin, and query cost is
-    * |queries|·|corpus|·8 integer adds on precomputed tables — the classic
-    * IVF-PQ building block. */
+    * than raw), encode is one row-local `graft_pq_encode` call per vector,
+    * and query cost is |queries|·|corpus|·8 integer adds on precomputed
+    * tables (`graft_pq_lut` / `graft_pq_adc`) — the classic IVF-PQ building
+    * block. The codebook (16 centroids) and the query LUTs (128 entries per
+    * query of the 1% slice) ride as scalar subqueries, one small job each;
+    * past a driver-sized query slice the LUTs would move to a broadcast
+    * join keyed on block. No (vector × dim × centroid) join, no encode
+    * window, no exchange before the top-k. */
   def q53PqTopk(s: SparkSession, dir: String): DataFrame = {
-    val xq = Tables.embeddings(s, dir)
-      .select(col("vec_id"), posexplode(col("embedding")).as(Seq("j0", "x")))
-      .select(col("vec_id"), (col("j0") + 1).as("j"),
-        expr("j0 div " + PqDims).as("block"),
-        round(col("x").cast("double") * FixedPoint, 0).cast("long").as("xq"))
-    val cent = xq.filter(col("vec_id") < PqK)
-      .select(col("vec_id").as("cid"), col("j"), col("block").as("cblock"), col("xq").as("cq"))
-    // per (vector, block, centroid): exact squared L2 over the 8 block dims
-    val blockDists = xq.join(broadcast(cent), xq("j") === cent("j") && xq("block") === cent("cblock"))
-      .groupBy(col("vec_id"), col("block"), col("cid"))
-      .agg(sum((col("xq") - col("cq")) * (col("xq") - col("cq"))).as("d2"))
-    val wEnc = Window.partitionBy(col("vec_id"), col("block"))
-      .orderBy(col("d2").asc, col("cid").asc)
-    val codes = blockDists
-      .withColumn("rn", row_number().over(wEnc)).filter(col("rn") === 1)
-      .select(col("vec_id"), col("block"), col("cid").as("code"))
-    val qdt = blockDists.filter(col("vec_id") % 100 === 0)
-      .select(col("vec_id").as("query_id"), col("block"), col("cid"), col("d2"))
-    val approx = codes
-      .join(qdt, codes("block") === qdt("block") && codes("code") === qdt("cid"))
-      .filter(col("query_id") =!= col("vec_id"))
-      .groupBy(col("query_id"), col("vec_id"))
-      .agg(sum(col("d2")).as("approx_d2"))
+    import graft.functions.VectorExpressions.{pq_adc, pq_encode, pq_lut}
+    graft.functions.GraftExtensions.register(s)
+    def quantized(emb: DataFrame): DataFrame =
+      emb.select(col("vec_id"), expr("transform(embedding, " +
+        s"x -> CAST(round(CAST(x AS DOUBLE) * $FixedPoint) AS BIGINT))").as("xv"))
+    val emb = Tables.embeddings(s, dir)
+    // the PqK centroids in cid order, so a code's index order is cid order
+    // and the (d2 asc, cid asc) tie rule is the kernel's lowest-index rule;
+    // both small sides read the scan directly (no fan-out stage of their own)
+    val book = quantized(emb.filter(col("vec_id") < PqK))
+      .agg(sort_array(collect_list(struct(col("vec_id"), col("xv")))).getField("xv"))
+      .scalar()
+    val luts = quantized(emb.filter(col("vec_id") % 100 === 0))
+      .agg(collect_list(struct(col("vec_id").as("query_id"),
+        pq_lut(col("xv"), book, PqBlocks).as("lut"))))
+      .scalar()
+    val xq = quantized(emb.repartition(s.sparkContext.defaultParallelism))
+    // encode BEFORE the explode: a select holding both would evaluate the
+    // encode above the Generate, once per (vector, query) pair. A vector
+    // without a code (no codebook, null embedding) scores null and has no
+    // candidate row — filtered after the Generate, where the optimizer
+    // cannot push the encode below the scan fan-out
+    val approx = xq
+      .select(col("vec_id"), pq_encode(col("xv"), book, PqBlocks).as("codes"))
+      .select(col("vec_id"), col("codes"), explode(luts).as("q"))
+      .filter(col("q.query_id") =!= col("vec_id"))
+      .select(col("q.query_id").as("query_id"), col("vec_id"),
+        pq_adc(col("q.lut"), col("codes"), expr(s"CAST(size(q.lut) div $PqBlocks AS INT)"))
+          .as("approx_d2"))
+      .filter(col("approx_d2").isNotNull)
     val wTop = Window.partitionBy(col("query_id"))
       .orderBy(col("approx_d2").asc, col("vec_id").asc)
     approx
@@ -391,8 +404,9 @@ object Vector {
   def q102IvfPqTopk(s: SparkSession, dir: String): DataFrame = {
     // r15 second pass (guide §2.3/§2.4 — the q282 array-fold discipline):
     // one array-form quantization; coarse assignment, residual, codes,
-    // and the query LUT are row-local codegen folds against 1-row
-    // broadcast codebook frames (constant-key equi joins); codes are
+    // and the query LUT are row-local array folds against the codebooks,
+    // attached as scalar subqueries (Dataset.scalar, one small job each —
+    // a constant-key join plans as BroadcastNestedLoopJoin); codes are
     // POSITIONS into the (block, pcid)-sorted codebook array so the ADC
     // sum indexes the query LUT directly — the before shape shuffled
     // O(n·cells) and O(n·blocks·codes) distance rows through hash
@@ -403,45 +417,42 @@ object Vector {
         s"x -> CAST(round(CAST(x AS DOUBLE) * $FixedPoint) AS BIGINT))").as("xv")))
     def l2(a: String, b: String): String =
       s"aggregate(zip_with($a, $b, (xx, yy) -> (xx - yy) * (xx - yy)), 0L, (acc2, vv) -> acc2 + vv)"
-    val k1 = lit(1).as("k1")
-    val centsRow = eintQ.filter(col("vec_id") < IvfCells)
+    val cents = eintQ.filter(col("vec_id") < IvfCells)
       .select(col("vec_id").as("cid"), col("xv").as("cq"))
-      .groupBy().agg(sort_array(collect_list(struct(col("cid"), col("cq")))).as("cents"))
+      .groupBy().agg(sort_array(collect_list(struct(col("cid"), col("cq")))))
+      .scalar()
     // assignment + residual in one row-local projection ((cd2, ccid) tie
     // rule as a lexicographic struct min)
     val casg = graft.Caches.persist(
-      eintQ.select(col("vec_id"), col("xv"), k1)
-        .join(broadcast(centsRow.select(col("cents"), k1)), Seq("k1"))
+      eintQ.select(col("vec_id"), col("xv"), cents.as("cents"))
         .withColumn("best", expr(
           s"array_min(transform(cents, ce -> struct(${l2("xv", "ce.cq")} AS d2, ce.cid AS cid)))"))
         .select(col("vec_id"), col("best").getField("cid").as("ccid"),
           expr("zip_with(xv, element_at(filter(cents, ce -> ce.cid = best.cid), 1).cq, " +
             "(a, b) -> a - b)").as("rq")))
     // untrained PQ codebook: the PqK smallest vec_ids' residual subspaces,
-    // one 1-row frame in (block, pcid) order
-    val pcRow = casg.filter(col("vec_id") < PqK)
+    // one array in (block, pcid) order
+    val pents = casg.filter(col("vec_id") < PqK)
       .select(col("vec_id").as("pcid"),
         posexplode(expr(s"transform(sequence(0, ${PqBlocks - 1}), " +
           s"b -> slice(rq, b * $PqDims + 1, $PqDims))")).as(Seq("block", "pq8")))
-      .groupBy().agg(sort_array(collect_list(struct(col("block"), col("pcid"), col("pq8")))).as("pents"))
+      .groupBy().agg(sort_array(collect_list(struct(col("block"), col("pcid"), col("pq8")))))
+      .scalar()
     // one-byte codes, stored as POSITIONS into the sorted codebook array
     // ((d2, pcid) tie rule preserved inside the struct min)
-    val codes = casg.select(col("vec_id"), col("ccid"), col("rq"), k1)
-      .join(broadcast(pcRow.select(col("pents"), k1)), Seq("k1"))
+    val codes = casg.select(col("vec_id"), col("ccid"), col("rq"), pents.as("pents"))
       .select(col("vec_id"), col("ccid"),
         expr(s"transform(sequence(0, ${PqBlocks - 1}), b -> array_min(transform(pents, (pe, i) -> IF(pe.block = b, struct(${l2(s"slice(rq, b * $PqDims + 1, $PqDims)", "pe.pq8")} AS d2, pe.pcid AS pcid, i AS i), struct(9223372036854775807L AS d2, 9223372036854775807L AS pcid, -1 AS i)))).i)")
           .as("cidx"))
     // query LUT per (query, probed cell), in codebook-array order
     val lut = eintQ.filter(col("vec_id") % 100 === 0)
-      .select(col("vec_id").as("query_id"), col("xv"), k1)
-      .join(broadcast(centsRow.select(col("cents"), k1)), Seq("k1"))
+      .select(col("vec_id").as("query_id"), col("xv"), cents.as("cents"))
       .select(col("query_id"), col("xv"), col("cents"),
         explode(expr(s"slice(array_sort(transform(cents, ce -> struct(${l2("xv", "ce.cq")} AS d2, ce.cid AS cid))), 1, $IvfProbes).cid"))
           .as("ccid"))
       .select(col("query_id"), col("ccid"),
         expr("zip_with(xv, element_at(filter(cents, ce -> ce.cid = ccid), 1).cq, " +
-          "(a, b) -> a - b)").as("qrq"), k1)
-      .join(broadcast(pcRow.select(col("pents"), k1)), Seq("k1"))
+          "(a, b) -> a - b)").as("qrq"), pents.as("pents"))
       .select(col("query_id"), col("ccid"),
         expr(s"transform(pents, pe -> ${l2(s"slice(qrq, pe.block * $PqDims + 1, $PqDims)", "pe.pq8")})").as("lutArr"))
     val wTop = Window.partitionBy(col("query_id"))
@@ -863,7 +874,7 @@ object Vector {
     * PQ (q53). The plan is q50's shape: broadcast query set, one corpus
     * scan, per-query top-k window; the recall join is per-query-bounded. */
   def q191Int8QuantRecall(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(s)
+    graft.functions.GraftExtensions.register(s)
     val qz = transform(col("v"), x =>
       greatest(lit(-127L), least(lit(127L),
         floor(x * lit(127.0) / col("ma") + lit(0.5)).cast("long"))))
@@ -1147,7 +1158,7 @@ object Vector {
     * double (IEEE-deterministic per row: same fold order both engines);
     * ranking ties break on vec_id. */
   def q239HardNegatives(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(s)
+    graft.functions.GraftExtensions.register(s)
     val emb = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("label"), v(col("embedding")).as("v"))
       .withColumn("nrm", norm(col("v")))
@@ -1221,7 +1232,7 @@ object Vector {
     * sub-vector — MaxSim over approximate per-slot candidates is exactly
     * ColBERT's production retrieval mode; the pivot+rank is unchanged. */
   def q249MaxsimTopk(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(s)
+    graft.functions.GraftExtensions.register(s)
     val sub = Tables.embeddings(s, dir)
       .select(col("vec_id"), v(col("embedding")).as("vv"))
       .select(col("vec_id"), explode(expr(
@@ -1292,7 +1303,7 @@ object Vector {
     * |queries| rows. */
   def q265NdcgRetrieval(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.{Window => W}
-    graft.functions.VectorExpressions.register(s)
+    graft.functions.GraftExtensions.register(s)
     val emb = graft.Caches.persist(
       Tables.embeddings(s, dir)
         .select(col("vec_id"), col("label").cast("long").as("label"),
@@ -1377,7 +1388,7 @@ object Vector {
     * everything after runs on |queries| rows. */
   def q268RetrievalMrrRecall(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.{Window => W}
-    graft.functions.VectorExpressions.register(s)
+    graft.functions.GraftExtensions.register(s)
     val emb = graft.Caches.persist(
       Tables.embeddings(s, dir)
         .select(col("vec_id"), col("label").cast("long").as("label"),
@@ -1453,7 +1464,7 @@ object Vector {
     * integer ppm. */
   def q274IvfRetrievalEval(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.{Window => W}
-    graft.functions.VectorExpressions.register(s)
+    graft.functions.GraftExtensions.register(s)
     val emb = graft.Caches.persist(
       Tables.embeddings(s, dir)
         .select(col("vec_id"), col("label").cast("long").as("label"),
@@ -1612,7 +1623,7 @@ object Vector {
     * rows. */
   def q275MapAtK(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.{Window => W}
-    graft.functions.VectorExpressions.register(s)
+    graft.functions.GraftExtensions.register(s)
     val emb = graft.Caches.persist(
       Tables.embeddings(s, dir)
         .select(col("vec_id"), col("label").cast("long").as("label"),
@@ -1695,7 +1706,7 @@ object Vector {
     * precision sums). */
   def q277TrainedIvfEval(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.{Window => W}
-    graft.functions.VectorExpressions.register(s)
+    graft.functions.GraftExtensions.register(s)
     val emb = graft.Caches.persist(
       Tables.embeddings(s, dir)
         .select(col("vec_id"), col("label").cast("long").as("label"),
@@ -1936,12 +1947,12 @@ object Vector {
   def q281TrainedPqDistortion(s: SparkSession, dir: String): DataFrame = {
     // r15 second pass (guide §2.3/§2.4, the q282 discipline): one array-
     // form quantization; coarse assignment + residual are a row-local
-    // struct-min fold against the 1-row broadcast codebook (constant-key
-    // equi join); PQ assignment is a row-local fold per (vec, block); the
-    // only shuffles left are the dictionary-size per-round centroid
-    // partial aggregates and the 8-row SSE aggregates. Before: every
-    // round exploded n·64 coordinates against the broadcast codebook into
-    // two O(n·codes) exchanges + a rank window.
+    // struct-min fold against the codebook scalar subquery; PQ assignment
+    // is a row-local fold per (vec, block); the only shuffles left are
+    // the dictionary-size per-round centroid partial aggregates and the
+    // 8-row SSE aggregates. Before: every round exploded n·64 coordinates
+    // against the broadcast codebook into two O(n·codes) exchanges + a
+    // rank window.
     // scan fan-out (the q114/q290 lesson): file splits are sized for raw
     // bytes, and every downstream pass is a CPU-dense row-local fold —
     // without it the whole query runs on the single-file split count
@@ -1951,20 +1962,19 @@ object Vector {
         s"x -> CAST(round(CAST(x AS DOUBLE) * $KmFP) AS BIGINT))").as("xv")))
     def l2(a: String, b: String): String =
       s"aggregate(zip_with($a, $b, (xx, yy) -> (xx - yy) * (xx - yy)), 0L, (acc2, vv) -> acc2 + vv)"
-    val k1 = lit(1).as("k1")
     // coarse quantize against the UNTRAINED stand-in cells (q102's shape,
     // data-derived seeds) — the residual plane the PQ training operates on
     val cseeds = Tables.embeddings(s, dir).select(col("vec_id"))
       .orderBy(col("vec_id")).limit(IvfCells)
-    val centsRow = eint.join(broadcast(cseeds), Seq("vec_id"))
+    val cents = eint.join(broadcast(cseeds), Seq("vec_id"))
       .select(col("vec_id").as("cid"), col("xv").as("cq"))
-      .groupBy().agg(sort_array(collect_list(struct(col("cid"), col("cq")))).as("cents"))
+      .groupBy().agg(sort_array(collect_list(struct(col("cid"), col("cq")))))
+      .scalar()
     // assignment + residual in one row-local projection ((cd2, ccid) tie
     // rule as a lexicographic struct min; best referenced twice → the
     // expensive fold is never re-inlined)
     val casgRes = graft.Caches.persist(
-      eint.select(col("vec_id"), col("xv"), k1)
-        .join(broadcast(centsRow.select(col("cents"), k1)), Seq("k1"))
+      eint.select(col("vec_id"), col("xv"), cents.as("cents"))
         .withColumn("best", expr(
           s"array_min(transform(cents, ce -> struct(${l2("xv", "ce.cq")} AS d2, ce.cid AS cid)))"))
         .select(col("vec_id"),
@@ -1977,12 +1987,11 @@ object Vector {
     // residuals — q102's untrained codebook, data-derived)
     val pseeds = Tables.embeddings(s, dir).select(col("vec_id"))
       .orderBy(col("vec_id")).limit(PqK)
-    def pcentsRow(p: DataFrame): DataFrame =
-      p.groupBy().agg(sort_array(collect_list(struct(col("block"), col("pcid"), col("pq8")))).as("pents"))
+    def pents(p: DataFrame): Column =
+      p.groupBy().agg(sort_array(collect_list(struct(col("block"), col("pcid"), col("pq8"))))).scalar()
     // row-local nearest code per (vec, block): (d2 asc, pcid asc) struct min
     def asg(p: DataFrame): DataFrame =
-      residBlocks.select(col("vec_id"), col("block"), col("rq8"), k1)
-        .join(broadcast(pcentsRow(p).select(col("pents"), k1)), Seq("k1"))
+      residBlocks.select(col("vec_id"), col("block"), col("rq8"), pents(p).as("pents"))
         .select(col("vec_id"), col("block"), col("rq8"),
           expr(s"array_min(transform(filter(pents, pe -> pe.block = block), pe -> struct(${l2("rq8", "pe.pq8")} AS d2, pe.pcid AS pcid)))")
             .as("best"))
@@ -2086,8 +2095,8 @@ object Vector {
     * Scale stance (r15 second pass, guide §2.3/§2.4): ONE quantization
     * pass in array form feeds every side (VERDICT r14 item 2's shared
     * plane). Every distance, argmin, and LUT entry is computed ROW-LOCALLY
-    * by codegen'd integer array folds against 1-row broadcast codebook
-    * frames (constant-key equi-joins — never a nested-loop join), so the
+    * by integer array folds against the codebooks, attached as scalar
+    * subqueries (`Dataset.scalar` — never a nested-loop join), so the
     * n·|cells| and n·|blocks|·|codes| distance fan-outs never cross an
     * exchange; the only corpus-scale shuffles left are the per-round
     * centroid-update partial aggregates (dictionary-sized after map-side
@@ -2109,8 +2118,9 @@ object Vector {
     // exact integer L2 between two BIGINT arrays (the q50 codegen fold)
     def l2(a: String, b: String): String =
       s"aggregate(zip_with($a, $b, (xx, yy) -> (xx - yy) * (xx - yy)), 0L, (acc2, vv) -> acc2 + vv)"
-    val k1 = lit(1).as("k1") // constant equi-key: BroadcastHashJoin, not BNLJ
     // 1-row frame holding the WHOLE coarse codebook as array<struct<cid,cq>>
+    // (attached to rows as a scalar subquery: a constant-key equi join
+    // would plan as BroadcastNestedLoopJoin once the optimizer folds the key)
     def centsRow(c: DataFrame): DataFrame =
       c.groupBy().agg(sort_array(collect_list(struct(col("cid"), col("cq")))).as("cents"))
     // row-local nearest cell — the exact (d2 asc, cid asc) tie rule as a
@@ -2123,8 +2133,7 @@ object Vector {
     var cent = eint.join(broadcast(cseeds), Seq("vec_id"))
       .select(col("vec_id").as("cid"), col("xv").as("cq"))
     for (_ <- 1 to KmIters) {
-      val asg = eint.select(col("vec_id"), col("xv"), k1)
-        .join(broadcast(centsRow(cent).select(col("cents"), k1)), Seq("k1"))
+      val asg = eint.select(col("xv"), centsRow(cent).scalar().as("cents"))
         .select(bestCell.getField("cid").as("cid"), col("xv"))
       cent = asg // exact truncating per-(cell, coordinate) mean
         .select(col("cid"), posexplode(col("xv")).as(Seq("j0", "xk")))
@@ -2133,10 +2142,8 @@ object Vector {
         .groupBy(col("cid"))
         .agg(expr("transform(array_sort(collect_list(struct(j0, cq))), e -> e.cq)").as("cq"))
     }
-    val centF = graft.Caches.trackCheckpoint(
-      centsRow(cent).select(col("cents"), k1).localCheckpoint())
-    val scored = eint.select(col("vec_id"), col("xv"), k1)
-      .join(broadcast(centF), Seq("k1"))
+    val centF = graft.Caches.trackCheckpoint(centsRow(cent).localCheckpoint())
+    val scored = eint.select(col("vec_id"), col("xv"), centF.scalar().as("cents"))
     // final assignment + residual against the TRAINED centroid, one
     // row-local projection (best is referenced twice → never re-inlined)
     val casg = graft.Caches.persist(scored
@@ -2168,8 +2175,7 @@ object Vector {
     var pcent = residBlocks.join(broadcast(pseeds), Seq("vec_id"))
       .select(col("block"), col("vec_id").as("pcid"), col("rq8").as("pq8"))
     for (_ <- 1 to KmIters) {
-      val asg = residBlocks.select(col("vec_id"), col("block"), col("rq8"), k1)
-        .join(broadcast(pcentsRow(pcent).select(col("pents"), k1)), Seq("k1"))
+      val asg = residBlocks.select(col("block"), col("rq8"), pcentsRow(pcent).scalar().as("pents"))
         .select(col("block"),
           expr(s"array_min(transform(filter(pents, pe -> pe.block = block), pe -> struct(${l2("rq8", "pe.pq8")} AS d2, pe.pcid AS pcid))).pcid")
             .as("pcid"),
@@ -2181,20 +2187,17 @@ object Vector {
         .groupBy(col("block"), col("pcid"))
         .agg(expr("transform(array_sort(collect_list(struct(j0, pq))), e -> e.pq)").as("pq8"))
     }
-    val pcentF = graft.Caches.trackCheckpoint(
-      pcentsRow(pcent).select(col("pents"), k1).localCheckpoint())
+    val pents = graft.Caches.trackCheckpoint(pcentsRow(pcent).localCheckpoint()).scalar()
     // trained codes, stored as the POSITION of the winning entry inside
     // the (block, pcid)-sorted codebook array — the ADC sum then reads the
     // query LUT (built in the same order) by index, no (block, code) join
-    val codes = casg.select(col("vec_id"), col("ccid"), col("rq"), k1)
-      .join(broadcast(pcentF), Seq("k1"))
+    val codes = casg.select(col("vec_id"), col("ccid"), col("rq"), pents.as("pents"))
       .select(col("vec_id"), col("ccid"),
         expr(s"transform(sequence(0, ${PqBlocks - 1}), b -> array_min(transform(pents, (pe, i) -> IF(pe.block = b, struct(${l2(s"slice(rq, b * $PqDims + 1, $PqDims)", "pe.pq8")} AS d2, pe.pcid AS pcid, i AS i), struct(9223372036854775807L AS d2, 9223372036854775807L AS pcid, -1 AS i)))).i)")
           .as("cidx"))
     // query ADC LUT per (query, probed cell): distances to every codebook
     // entry, in codebook-array order — bounded |q|·nprobe rows
-    val lut = probes.select(col("query_id"), col("ccid"), col("qrq"), k1)
-      .join(broadcast(pcentF), Seq("k1"))
+    val lut = probes.select(col("query_id"), col("ccid"), col("qrq"), pents.as("pents"))
       .select(col("query_id"), col("ccid"),
         expr(s"transform(pents, pe -> ${l2(s"slice(qrq, pe.block * $PqDims + 1, $PqDims)", "pe.pq8")})").as("lutArr"))
     val wTop = W.partitionBy(col("query_id"))
@@ -2509,7 +2512,7 @@ object Vector {
     * same graph): returns (qv = quantized integral-double arrays + ‖·‖²,
     * initEdges = ring graph, edges = refined kNN graph). */
   private def nnDescentBuild(s: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) = {
-    graft.functions.VectorExpressions.register(s)
+    graft.functions.GraftExtensions.register(s)
     val qv = graft.Caches.persist(Tables.embeddings(s, dir)
       .select(col("vec_id"),
         transform(col("embedding"), x => round(x.cast("double") * KmFP, 0)).as("vec"))
@@ -2835,7 +2838,7 @@ object Vector {
     * plane, `|est−m·d2|·10⁶ div (m·d2)` floored ppm, aggregated per
     * probe (mean/max over its K−1 pairs). */
   def q289JlProjectionAudit(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(s)
+    graft.functions.GraftExtensions.register(s)
     val pid = evalProbeIds(s, dir)
     // probe vectors only: the audit grid is fixed-size by construction
     val px = Tables.embeddings(s, dir).join(broadcast(pid), Seq("vec_id"))

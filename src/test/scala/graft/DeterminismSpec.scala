@@ -43,6 +43,12 @@ class DeterminismSpec extends SparkSpec {
   pinned("q119_weighted_median") // integer cumulative weights
   pinned("q124_mad_outliers")    // bucket-refinement median selection
   pinned("q48_dedup_clusters")   // iterative min-label propagation
+  // repartition fan-outs ahead of the native kernels (doc_id-hashed at the
+  // shuffle width for shingles, round-robin for q53's vectors): row-local
+  // work, so the split must not show in results
+  pinned("q46_minhash_lsh_pairs")   // shingle-md5 kernel → minhash bands
+  pinned("q53_pq_topk")             // PQ encode/LUT/ADC kernels, top-k window
+  pinned("q106_ngram_jaccard_join") // shingle-md5 kernel → prefix-filter join
   pinned("q127_hll_distinct")    // integer HLL registers + harmonic sum
   pinned("q132_bitmap_rollup")   // bit_or word bitmaps, popcount rollup
   pinned("q142_rolling_bitmap")  // windowed bitmap OR-merge

@@ -161,6 +161,7 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("GraftExtensions injection makes graft_dot resolvable from SQL text") {
+    // (covers every other native function too: graft_shingle_md5, graft_pq_*)
     // A shared-context test can't build a second session with withExtensions
     // (builder reuses the existing one), so apply the injected functions to
     // the live registry via the same public registerFunctions hook a real
@@ -175,6 +176,137 @@ class OperatorsSpec extends SparkSpec {
     val v = spark.sql(
       "SELECT graft_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d").head.getDouble(0)
     assert(v == 11.0)
+    val r = spark.sql(
+      """SELECT graft_shingle_md5(array('a', 'b', 'c'), 2) AS sh,
+        |  graft_pq_encode(array(1L, 9L), array(array(0L, 0L), array(2L, 8L)), 2) AS codes,
+        |  graft_pq_lut(array(1L, 9L), array(array(0L, 0L), array(2L, 8L)), 2) AS lut,
+        |  graft_pq_adc(array(1L, 1L, 81L, 1L), array(1, 0), 2) AS adc""".stripMargin).head
+    assert(r.getSeq[String](0) == Seq(md5hex("a b"), md5hex("b c")))
+    assert(r.getSeq[Int](1) == Seq(0, 1)) // block 0 ties: the lowest index
+    assert(r.getSeq[Long](2) == Seq(1L, 1L, 81L, 1L))
+    assert(r.getLong(3) == 82L)
+    val fns = graft.functions.GraftExtensions.functions.map(_.name)
+    assert(fns.toSet == Set("graft_dot", "graft_shingle_md5", "graft_pq_encode",
+      "graft_pq_lut", "graft_pq_adc"))
+    fns.foreach(f => assert(spark.catalog.functionExists(f), f))
+  }
+
+  private def md5hex(s: String): String =
+    java.security.MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
+      .map(b => f"${b & 0xff}%02x").mkString
+
+  /** Evaluate `e` on no input both interpreted (`eval`) and through a
+    * generated projection, and require the two to agree. */
+  private def evalBoth(e: org.apache.spark.sql.catalyst.expressions.Expression): Any = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateMutableProjection
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    import org.apache.spark.sql.types.ArrayType
+    def norm(v: Any): Any = (v, e.dataType) match {
+      case (a: ArrayData, ArrayType(et, _)) => a.toSeq[Any](et).map(norm)
+      case (u: org.apache.spark.unsafe.types.UTF8String, _) => u.toString
+      case (x, _) => x
+    }
+    val interpreted = norm(e.eval(InternalRow.empty))
+    val row = GenerateMutableProjection.generate(Seq(e))(InternalRow.empty)
+    val generated = if (row.isNullAt(0)) null else norm(row.get(0, e.dataType))
+    assert(interpreted == generated, s"$e: eval $interpreted, codegen $generated")
+    interpreted
+  }
+
+  test("graft_shingle_md5 edge cases: short input, empty tokens, repeats, null (eval == codegen)") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.types.{ArrayType, StringType}
+    import graft.functions.ShingleMd5
+    def sh(toks: Seq[String], n: Int): Any = evalBoth(ShingleMd5(
+      Literal.create(toks, ArrayType(StringType)), Literal(n)))
+    assert(sh(Seq("a", "b", "c", "d"), 5) == Seq())
+    assert(sh(Seq(), 5) == Seq())
+    assert(sh(Seq("", "a", "", "b", "", null, "c", ""), 2) == Seq(md5hex("a b"), md5hex("b c")))
+    assert(sh(Seq("a", "b", "a", "b", "a"), 2) == Seq(md5hex("a b"), md5hex("b a")))
+    assert(sh(Seq("x", "y"), 1) == Seq(md5hex("x"), md5hex("y")))
+    assert(sh(Seq("x", "y"), 0) == Seq())
+    assert(evalBoth(ShingleMd5(Literal.create(null, ArrayType(StringType)), Literal(5))) == null)
+  }
+
+  test("graft_shingle_md5 equals Text.shingles5 + md5 on every sf0.01 document") {
+    graft.functions.GraftExtensions.register(spark)
+    val docs = Tables.documents(spark, sf("sf0.01"))
+    val cmp = docs.select(col("doc_id"),
+      array_sort(transform(Text.shingles5(Text.tokens(col("text"))), g => md5(g.cast("binary"))))
+        .as("interpreted"),
+      array_sort(graft.functions.TextExpressions.shingle_md5(
+        split(lower(col("text")), "[^a-z0-9]+"), 5)).as("kernel"))
+    val rows = cmp.collect()
+    assert(rows.length == docs.count() && rows.exists(_.getSeq[String](1).nonEmpty))
+    rows.foreach(r => assert(r.getSeq[String](1) == r.getSeq[String](2), s"doc ${r.getLong(0)}"))
+  }
+
+  test("graft_pq_* edge cases: ties pick the lowest index, null and empty inputs (eval == codegen)") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType}
+    import graft.functions.{PqAdc, PqEncode, PqLut}
+    val vecT = ArrayType(LongType)
+    val bookT = ArrayType(ArrayType(LongType))
+    def enc(x: Seq[Long], book: Seq[Seq[Long]], blocks: Int): Any =
+      evalBoth(PqEncode(Literal.create(x, vecT), Literal.create(book, bookT), Literal(blocks)))
+    def lut(x: Seq[Long], book: Seq[Seq[Long]], blocks: Int): Any =
+      evalBoth(PqLut(Literal.create(x, vecT), Literal.create(book, bookT), Literal(blocks)))
+    // equal distances in every block: the lowest index wins
+    assert(enc(Seq(1, 1), Seq(Seq(2, 0), Seq(0, 2)), 1) == Seq(0))
+    assert(enc(Seq(1, 1, 5, 5), Seq(Seq(9, 9, 5, 5), Seq(1, 1, 5, 5), Seq(1, 1, 5, 5)), 2) == Seq(1, 0))
+    assert(lut(Seq(1, 1, 5, 5), Seq(Seq(9, 9, 5, 5), Seq(1, 1, 4, 5)), 2) == Seq(128L, 0L, 0L, 1L))
+    assert(enc(Seq(1, 2), Seq(), 1) == null)
+    assert(enc(Seq(1, 2), Seq(Seq(1, 2), null), 1) == null)
+    assert(evalBoth(PqEncode(Literal.create(null, vecT), Literal.create(Seq(Seq(1L)), bookT), Literal(1))) == null)
+    assert(evalBoth(PqLut(Literal.create(Seq(1L), vecT), Literal.create(null, bookT), Literal(1))) == null)
+    def adc(l: Seq[Long], codes: Seq[Int], k: Int): Any = evalBoth(PqAdc(
+      Literal.create(l, vecT), Literal.create(codes, ArrayType(IntegerType)), Literal(k)))
+    assert(adc(Seq(1, 2, 30, 40), Seq(1, 0), 2) == 32L)
+    assert(adc(Seq(1, 2), Seq(), 2) == 0L)
+    assert(evalBoth(PqAdc(Literal.create(null, vecT),
+      Literal.create(Seq(0), ArrayType(IntegerType)), Literal(1))) == null)
+    // shape errors throw instead of reading past a block or a table
+    intercept[IllegalArgumentException](enc(Seq(1, 2, 3), Seq(Seq(1, 2, 3)), 2))
+    intercept[IllegalArgumentException](enc(Seq(1, 2), Seq(Seq(1, 2, 3)), 1))
+    intercept[IllegalArgumentException](adc(Seq(1, 2), Seq(2), 2))
+  }
+
+  test("graft_pq_* equal the aggregate(zip_with) L2 fold on every sf0.01 vector") {
+    graft.functions.GraftExtensions.register(spark)
+    import graft.functions.VectorExpressions.{pq_adc, pq_encode, pq_lut}
+    val (blocks, d, k) = (8, 8, 16)
+    val eint = Tables.embeddings(spark, sf("sf0.01")).select(col("vec_id"),
+      expr("transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 16777216) AS BIGINT))").as("xv"))
+    val book = eint.filter(col("vec_id") < k)
+      .agg(sort_array(collect_list(struct(col("vec_id"), col("xv")))).getField("xv")).scalar()
+    val fold = s"aggregate(zip_with(slice(xv, b * $d + 1, $d), slice(book[c], b * $d + 1, $d), " +
+      "(x, y) -> (x - y) * (x - y)), 0L, (acc, v) -> acc + v)"
+    val rows = eint.select(col("vec_id"), col("xv"), book.as("book"))
+      .select(col("vec_id"),
+        expr(s"transform(sequence(0, ${blocks - 1}), b -> array_min(transform(sequence(0, ${k - 1}), " +
+          s"c -> struct($fold AS d2, c AS c))).c)").as("codes_fold"),
+        expr(s"flatten(transform(sequence(0, ${blocks - 1}), b -> " +
+          s"transform(sequence(0, ${k - 1}), c -> $fold)))").as("lut_fold"),
+        pq_encode(col("xv"), col("book"), blocks).as("codes"),
+        pq_lut(col("xv"), col("book"), blocks).as("lut"))
+      .select(col("*"),
+        expr(s"aggregate(sequence(0, ${blocks - 1}), 0L, " +
+          s"(acc, b) -> acc + element_at(lut_fold, b * $k + codes_fold[b] + 1))").as("adc_fold"),
+        pq_adc(col("lut"), col("codes"), lit(k)).as("adc"))
+      .collect()
+    assert(rows.length == 500)
+    def seq(r: org.apache.spark.sql.Row, c: String): Seq[Any] = r.getSeq[Any](r.fieldIndex(c))
+    rows.foreach { r =>
+      val id = r.getAs[Long]("vec_id")
+      assert(seq(r, "codes") == seq(r, "codes_fold"), s"codes of $id")
+      assert(seq(r, "lut") == seq(r, "lut_fold"), s"lut of $id")
+      assert(r.getAs[Long]("adc") == r.getAs[Long]("adc_fold"), s"adc of $id")
+    }
+    // the codebook's own vectors encode to themselves in every block
+    rows.filter(_.getAs[Long]("vec_id") < k).foreach { r =>
+      assert(seq(r, "codes").distinct == Seq(r.getAs[Long]("vec_id").toInt))
+    }
   }
 
   test("q83 KMV sketch estimates distinct counts within 4 standard errors") {

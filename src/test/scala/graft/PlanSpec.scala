@@ -63,6 +63,37 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("[codegen id"), p)
   }
 
+  test("q53: PQ runs row-locally — no join, no Window over an exploded (vector, dim) frame") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Generate, Join, LogicalPlan, Window => LWindow}
+    val df = Vector.q53PqTopk(spark, sf())
+    val lp = df.queryExecution.optimizedPlan
+    def explodesDims(p: LogicalPlan): Boolean = p.exists {
+      case g: Generate => g.generator.references.exists(_.name == "embedding")
+      case _ => false
+    }
+    val windows = lp.collect { case w: LWindow => w }
+    assert(windows.nonEmpty && windows.forall(w => !explodesDims(w.child)), lp)
+    assert(windows.forall(_.partitionSpec.flatMap(_.references.map(_.name)) == Seq("query_id")), lp)
+    assert(lp.collect { case j: Join => j }.isEmpty, lp)
+    val p = finalPlan(df)
+    assert(p.contains("graft_pq_encode") && p.contains("graft_pq_adc"), p)
+    assert(!p.contains("NestedLoopJoin") && !p.contains("CartesianProduct"), p)
+  }
+
+  test("hashedShingles: one row-local kernel call — no Window, no aggregate, one fan-out exchange") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, RepartitionOperation, Window => LWindow}
+    val df = ops.Dedup.hashedShingles(spark, sf())
+    val lp = df.queryExecution.optimizedPlan
+    assert(lp.collect { case w: LWindow => w }.isEmpty, lp)
+    assert(lp.collect { case a: Aggregate => a }.isEmpty, lp)
+    assert(lp.collect { case r: RepartitionOperation => r }.size == 1, lp)
+    val p = finalPlan(df)
+    assert(p.contains("graft_shingle_md5"), p)
+    val finalTree = p.linesIterator.dropWhile(!_.contains("== Final Plan =="))
+      .takeWhile(!_.contains("== Initial Plan ==")).mkString("\n")
+    assert("Exchange".r.findAllIn(finalTree).size == 1, p)
+  }
+
   test("q68: top-k Aggregator aggregates partial+final (map-side combine caps the shuffle)") {
     val p = finalPlan(Analytics.q68TopkAggregator(spark, sf()))
     assert("ObjectHashAggregate".r.findAllIn(p).size >= 2, p)
